@@ -1348,9 +1348,11 @@ def extract_document(
     engine metrics. Exceptions propagate (the batch wrapper records
     parse_ok=False rows).
 
-    include_render_extras adds the prettyPrint render and the get_doc
-    round-trip (readability.py:114-126) — opt-in because the re-parse
-    is pure overhead for the corpus pipeline's hot path."""
+    include_render_extras adds the render extras: the full-page render
+    ``full_html``, the prettyPrint render ``pretty_html`` and the get_doc
+    round-trip ``docrender_html`` (readability.py:114-126). They are
+    opt-in because no corpus pipeline reads them, and the renders and
+    the re-parse are pure overhead on its hot path."""
     doc = Arc90Document(content, url=url, **settings)
     doc.process_document()
     out = {
@@ -1358,12 +1360,12 @@ def extract_document(
         "article_html": doc.get_article_body(),
         "article_text": doc.get_article_text(),
         "footnotes": doc.get_article_footnotes(),
-        "full_html": doc.get_html(),
         "metrics": doc.metrics,
     }
     if include_render_extras:
         # same call order as the oracle runner: plain render first,
         # then pretty (comments already removed), then get_doc
+        out["full_html"] = doc.get_html()
         out["pretty_html"] = doc.get_html(pretty_print=True)
         out["docrender_html"] = doc.get_doc().render_contents()
     return out

@@ -14,8 +14,15 @@ Scale design notes (100 TB / 1000 executors):
 - repartition on pmod(hash(url), P) gives uniform work distribution
   regardless of host skew (a Zipf-hot host spreads across all P
   partitions because the key is the url, not the host). P defaults to
-  spark.sql.shuffle.partitions; at cluster scale submit with P ≈ 2-3×
-  total cores.
+  one task per core (defaultParallelism): every Python task pays a
+  fixed ~0.18 s of worker CPU, because pyspark's worker calls
+  importlib.invalidate_caches() per task and each zipimporter on the
+  worker path (pyspark.zip, py4j, the spark-core jar) re-reads its
+  archive directory (measured on a 4-core host, Python 3.11, Spark
+  4.1). A 4×-cores wave for straggler balance paid that 4× over and
+  doubled the UDF stage's run time, so do not re-add it without
+  measuring. At cluster scale submit with num_partitions ≈ 2-3× total
+  cores.
 - the done-manifest is a url list, small relative to the corpus →
   broadcast anti-join; at 10^12 rows it becomes a bucketed sort-merge
   anti-join (AQE picks this automatically once it exceeds the
@@ -165,13 +172,16 @@ def extraction_plan(
 
     - ``"window"`` (default): repartition(n, url) [REPARTITION_BY_NUM —
       exempt from AQE coalescing, so the CPU-bound UDF stage keeps n
-      perfectly even tasks] → partition-local row_number window (the
-      hash partitioning satisfies the window's distribution → no
-      second exchange). Duplicates cross the wire. Best when dup rate
-      is low — measured fastest at both 8 and 32 cores on the bench
-      corpus (0% dups): the agg variant cost +23%@8 / +80%@32 there,
-      the latter mostly from AQE coalescing the agg exchange unevenly
-      (808-1709 docs/task → straggler tail in the Python stage).
+      perfectly even tasks; n = ``num_partitions``, else one task per
+      core, because each Python task costs a fixed ~0.18 s of worker
+      CPU, see the module docstring] → partition-local row_number
+      window (the hash partitioning satisfies the window's
+      distribution → no second exchange). Duplicates cross the wire.
+      Best when dup rate is low — measured fastest at both 8 and 32
+      cores on the bench corpus (0% dups): the agg variant cost
+      +23%@8 / +80%@32 there, the latter mostly from AQE coalescing
+      the agg exchange unevenly (808-1709 docs/task → straggler tail
+      in the Python stage).
     - ``"agg"``: groupBy(url).agg(max_by(html, struct(warc_ts, h))) —
       partial_max_by runs MAP-SIDE, so at Common-Crawl dup rates
       (30-60%) most duplicate payloads never pay shuffle bytes. The
@@ -197,7 +207,6 @@ def extraction_plan(
         # broadcast anti-join BEFORE the exchange: already-done urls
         # never pay shuffle bytes
         p = p.join(F.broadcast(done_urls.select("url")), "url", "left_anti")
-    n = num_partitions or (4 * spark.sparkContext.defaultParallelism)
     if dedup == "agg":
         p = p.groupBy("url").agg(
             F.expr("max_by(html, struct(warc_ts, xxhash64(html)))").alias(
@@ -208,7 +217,7 @@ def extraction_plan(
         from pyspark.sql import Window
 
         if not assume_clustered:
-            p = p.repartition(n, F.col("url"))
+            p = p.repartition(_udf_width(spark, num_partitions), F.col("url"))
         p = (
             p.withColumn(
                 "_rn",
@@ -224,6 +233,12 @@ def extraction_plan(
         )
     fn = make_extract_batch(settings) if settings else extract_batch
     return p.mapInPandas(fn, EXTRACT_SCHEMA)
+
+
+def _udf_width(spark: SparkSession, num_partitions: int | None) -> int:
+    """Task count of the window path's UDF stage: one per core unless
+    the caller sets it (why: extraction_plan's docstring)."""
+    return num_partitions or spark.sparkContext.defaultParallelism
 
 
 def run_extract_job(
@@ -251,7 +266,7 @@ def run_extract_job(
         lineage={
             "job": "extract",
             "resumed": done is not None,
-            "num_partitions": num_partitions,
+            "num_partitions": _udf_width(spark, num_partitions),
         },
     )
     # THIS run's rows only (incremental snapshot read, never a full

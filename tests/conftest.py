@@ -12,6 +12,14 @@ if REPO not in sys.path:
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
+# the python2 reference implementation the differential tests run as
+# their oracle; without it those tests cannot compare, so they skip
+REFERENCE_MODULE = "/root/reference/readability.py"
+needs_reference = pytest.mark.skipif(
+    not os.path.exists(REFERENCE_MODULE),
+    reason=f"python2 reference oracle {REFERENCE_MODULE} is absent",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

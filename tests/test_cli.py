@@ -14,6 +14,8 @@ import sys
 
 import pytest
 
+from .conftest import needs_reference
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDENS = os.path.join(REPO, "tests", "fixtures", "goldens.jsonl")
 
@@ -53,6 +55,7 @@ def _sample_fixtures(k_families: int = 4):
 @pytest.mark.skipif(
     shutil.which("python2") is None, reason="python2 oracle unavailable"
 )
+@needs_reference
 @pytest.mark.parametrize(
     "rec", _sample_fixtures(), ids=lambda r: r["id"]
 )

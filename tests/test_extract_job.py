@@ -109,6 +109,12 @@ def test_resume_anti_join_protocol(spark, tmp_path):
     assert len(snaps) == 2
     assert snaps[0]["lineage"]["resumed"] is False
     assert snaps[1]["lineage"]["resumed"] is True
+    # the lineage records the width the plan ran at, not the None default
+    for snap in snaps:
+        assert (
+            snap["lineage"]["num_partitions"]
+            == spark.sparkContext.defaultParallelism
+        )
     assert snaps[1]["parent_id"] == snaps[0]["snapshot_id"]
     assert r2["snapshot_id"] == snaps[1]["snapshot_id"]
 

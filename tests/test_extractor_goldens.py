@@ -63,6 +63,13 @@ def test_byte_identity(case):
             case["docrender_b64"]
         ), "get_doc round-trip mismatch"
 
+    # the renders are opt-in: the hot path skips them, and skipping them
+    # changes none of the extraction outputs
+    plain = extract_document(html, url=case["url"], **case["settings"])
+    assert "full_html" not in plain
+    for key in ("title", "article_html", "article_text", "footnotes"):
+        assert plain[key] == result[key], key
+
 
 def test_corpus_covers_all_families():
     families = {c["family"] for c in CASES}

@@ -35,17 +35,23 @@ def test_extraction_plan_single_exchange(spark):
     overhead). window: REPARTITION_BY_NUM (AQE-coalescing-exempt, even
     tasks) + partition-local window with the top-1 limit pushed below
     the sort. agg: partial_max_by below the exchange (duplicate
-    payloads cut map-side before they cost network bytes)."""
+    payloads cut map-side before they cost network bytes). The window
+    width is num_partitions when given, else one task per core."""
     from readability_py_spark.plans.extract_job import (
         extraction_plan,
         pages_from_documents,
     )
 
     pages = pages_from_documents(spark, SF_SMOKE)
-    plan = _physical_plan(extraction_plan(pages, num_partitions=8))
-    assert len(re.findall(r"Exchange", plan)) == 1, plan
-    assert "REPARTITION_BY_NUM" in plan, plan
-    assert "WindowGroupLimit" in plan, plan
+    for kwargs, width in (
+        ({"num_partitions": 8}, 8),
+        ({}, spark.sparkContext.defaultParallelism),
+    ):
+        plan = _physical_plan(extraction_plan(pages, **kwargs))
+        assert len(re.findall(r"Exchange", plan)) == 1, plan
+        assert "REPARTITION_BY_NUM" in plan, plan
+        assert re.search(rf"hashpartitioning\(url#\d+, {width}\)", plan), plan
+        assert "WindowGroupLimit" in plan, plan
 
     plan_agg = _physical_plan(
         extraction_plan(pages, num_partitions=8, dedup="agg")

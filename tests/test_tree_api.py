@@ -10,6 +10,8 @@ import subprocess
 
 import pytest
 
+from .conftest import needs_reference
+
 HTML = (
     "<html><head><title>T</title></head><body>"
     "<div id='a'><p class='x'>one <b>bold</b> two</p><p>three</p></div>"
@@ -77,6 +79,7 @@ def _label(n):
     return "txt:" + str(n)
 
 
+@needs_reference
 def test_directional_finds_match_reference(oracle):
     from readability_py_spark.core.parser import SoupParser
 
