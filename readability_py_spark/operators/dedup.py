@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import load_table, maybe_parallelize, parallelize_hint
+from .textstats import _duck_grams, _gram_array, gram_array
 
 MINHASH_K = 12
 MINHASH_BAND_SIZE = 3  # 4 bands of 3
@@ -83,18 +84,10 @@ def shingles_from_tokens(toks) -> F.Column:
     """Distinct bigram word-shingle set from an already-split token
     array — so a shared persisted (doc_id, toks) relation can feed the
     MinHash shingle build AND the SimHash token hash without a second
-    scan + split (VERDICT r5 item 5)."""
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.concat(
-                    F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
+    scan + split (VERDICT r5 item 5). The bigrams come from
+    textstats.gram_array's shifted-slice ``zip_with``, whose lambda body
+    never refers to ``toks`` (see its docstring for the cost)."""
+    return F.array_distinct(gram_array(toks, 2))
 
 
 def shingles_of(text_col) -> F.Column:
@@ -194,38 +187,22 @@ SELECT a_id, b_id, jaccard FROM pairs WHERE jaccard >= {JACCARD_THRESHOLD}
 """
 
 
-def _minhash_col(i: int) -> F.Column:
-    """h_i = min over shingles of md5(i || ':' || s) — computed map-only
-    inside the row via array expressions (no explode, no shuffle; the
-    whole signature build is embarrassingly parallel at 100 TB)."""
-    return F.array_min(
-        F.transform(
-            F.col("sh"),
-            lambda s: F.md5(F.encode(F.concat(F.lit(f"{i}:"), s), "utf-8")),
-        )
-    )
-
-
-def _minhash_fast_col(i: int) -> F.Column:
-    """Production-hash permutation h_i = min over shingles of
-    xxhash64(i, s) — a JVM hash an order of magnitude cheaper than the
-    md5-hex family (no hex string materialization, no utf-8 encode of
-    a prefixed copy). Same map-only array_min∘transform shape."""
-    return F.array_min(
-        F.transform(F.col("sh"), lambda s: F.xxhash64(F.lit(i), s))
-    )
+# The two MinHash permutation families _band_signatures can build:
+# h_i(s) = md5(i || ':' || s) as hex (the oracle-pinned default — the one
+# hash Spark and DuckDB both implement) or xxhash64(i, s) (production).
+MINHASH_FAMILIES = ("md5", "xxhash64")
 
 
 def _band_signatures(
     d: DataFrame,
     k: int = MINHASH_K,
     band_size: int = MINHASH_BAND_SIZE,
-    hash_col=_minhash_col,
+    family: str = "md5",
 ) -> DataFrame:
     """(doc_id, band, band_sig) for k minhashes in bands of band_size —
     map-only signature build (no explode of shingles, no shuffle).
-    ``hash_col`` picks the permutation family: md5 (oracle-parity
-    default) or xxhash64 (production).
+    ``family`` is one of MINHASH_FAMILIES: "md5" (oracle-parity default)
+    or "xxhash64" (production); any other value raises ValueError.
 
     r7: the k mins come from ONE aggregate pass over the shingle array
     (acc = k-vector of running mins, null-initialized; ``least`` skips
@@ -239,7 +216,12 @@ def _band_signatures(
     empty/1-token doc folds to an all-null vector → concat_ws skips
     nulls → band_sig '' → dropped by the existing filter, matching
     array_min's null on empty input."""
-    fast = hash_col is _minhash_fast_col
+    if family not in MINHASH_FAMILIES:
+        raise ValueError(
+            f"unknown MinHash family {family!r}; expected one of "
+            f"{MINHASH_FAMILIES}"
+        )
+    fast = family == "xxhash64"
 
     def hashes_of(s: Column) -> Column:
         if fast:
@@ -338,9 +320,7 @@ def q_minhash_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_operators_r4.py): identical shingle sets ⇒ identical
     signatures, and the full LSH dedup pipeline over either family
     verifies to the same near-dup pair set at test SF."""
-    return _band_signatures(
-        _shingled(spark, sf_dir), hash_col=_minhash_fast_col
-    )
+    return _band_signatures(_shingled(spark, sf_dir), family="xxhash64")
 
 
 def minhash_lsh_dups_from(sig: DataFrame, sh: DataFrame) -> DataFrame:
@@ -496,7 +476,7 @@ def q_minhash_lsh_capped_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         k=MINHASH_K_PROD,
         band_size=MINHASH_BAND_SIZE_PROD,
-        hash_col=_minhash_fast_col,
+        family="xxhash64",
     )
     return _capped_tail(spark, sf_dir, d, sig, F.xxhash64(F.col("text")))
 
@@ -904,8 +884,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CLAUDE.md: IEEE -0.0 + typed-hash rules); the corpus' cosine
     distribution is bimodal (near-dup replicas ≥ ~0.8, unrelated docs
     ≤ ~0.2), so the 0.6 threshold is robust to summation order."""
-    from .textstats import _gram_array
-
     docs = maybe_parallelize(
         load_table(spark, sf_dir, "documents"), spark
     ).select("doc_id", "text")
@@ -967,8 +945,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_tfidf() -> str:
-    from .textstats import _duck_grams
-
     return f"""
 WITH t AS (
   SELECT doc_id, unnest({_duck_grams(TFIDF_N)}) AS term FROM documents

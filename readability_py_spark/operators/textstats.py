@@ -227,7 +227,14 @@ def gopher_flag_cols(
 ) -> dict[str, F.Column]:
     """The Gopher scalar rules as named map-only expressions over a
     text column — shared by q_quality_gopher (which emits every rule
-    boolean) and the composed pipeline gate (which ANDs them)."""
+    boolean) and the composed pipeline gate (which ANDs them).
+
+    ``stops`` is a set of distinct words: the stopword hit count is
+    ``size(array_intersect(stops, clean_words))``, which counts a word
+    listed twice once. It is not a ``filter`` over ``stops`` whose
+    lambda tests ``clean_words``: that lambda would rebuild
+    ``clean_words`` (a split plus a regexp per word) once per stop
+    word."""
     words = F.split(F.trim(text), r"\s+")
     wc = F.size(words)
     mwl = F.aggregate(
@@ -242,10 +249,7 @@ def gopher_flag_cols(
         words, lambda w: F.regexp_replace(F.lower(w), "[^a-z]", "")
     )
     stop_hits = F.size(
-        F.filter(
-            F.array(*[F.lit(s) for s in stops]),
-            lambda s: F.array_contains(clean_words, s),
-        )
+        F.array_intersect(F.array(*[F.lit(s) for s in stops]), clean_words)
     )
     r_wc = (wc >= GOPHER_MIN_WORDS) & (wc <= GOPHER_MAX_WORDS)
     r_mwl = (mwl >= GOPHER_MIN_MWL) & (mwl <= GOPHER_MAX_MWL)
@@ -365,21 +369,29 @@ REP_DUP5_MAX = 0.15
 def gram_array(words: F.Column, n: int) -> F.Column:
     """In-row word n-gram array (empty when the doc has < n words).
 
-    The gram is ``array_join(slice(words, i, n), ' ')`` — two expression
-    nodes per gram instead of the previous ``concat_ws`` of n separate
-    ``element_at`` calls (higher-order lambdas evaluate interpreted, so
-    per-gram node count is the unit of cost; measured 12.4 s → 4 s on
-    the 13-gram decontamination build at sf1.0, bench_extra
-    ``decon_gram_build``). Output is byte-identical: ``split`` never
-    yields nulls and the ``size >= n`` guard makes every slice full
-    width, so join-with-space == concat_ws-with-space."""
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (n - 1)),
-            lambda i: F.array_join(F.slice(words, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    Built element-wise from n shifted slices of the word array:
+    gram i joins ``slice(words, j, m)[i]`` for j = 1..n, with
+    m = size(words) − n + 1 — ``zip_with`` for bigrams, ``arrays_zip``
+    + ``concat_ws`` above. No lambda body refers to ``words``: a lambda
+    body re-evaluates every non-lambda subexpression once per element,
+    so indexing ``words`` inside the lambda would re-run the row's
+    split once per gram — O(words²) per document (the winnow note in
+    ``_winnow_sql`` found the same effect for its regexp). Each gram
+    equals ``array_join(slice(words, i, n), ' ')``: ``split`` never
+    yields nulls and the ``size >= n`` guard keeps every slice full
+    width."""
+    m = F.size(words) - (n - 1)
+    cols = [F.slice(words, j, m) for j in range(1, n + 1)]
+    if n == 2:
+        grams = F.zip_with(*cols, lambda a, b: F.concat(a, F.lit(" "), b))
+    else:
+        grams = F.transform(
+            F.arrays_zip(*cols),
+            lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]),
+        )
+    return F.when(F.size(words) >= n, grams).otherwise(
+        F.array().cast("array<string>")
+    )
 
 
 def _run_fold(arr: F.Column, dup_sum: bool) -> F.Column:
@@ -948,16 +960,8 @@ DECON_SLICE = 97  # synthetic eval set = documents with doc_id % 97 == 0
 def _gram_array(text_col, n: int) -> F.Column:
     """All n-word grams of a text column (same trim/lower/\\s+ word
     normalization as the repetition family / _duck_grams); empty array
-    below n words. Gram construction is array_join∘slice — see
-    gram_array's docstring for the byte-identity + cost argument."""
-    w = F.split(F.trim(F.lower(text_col)), r"\s+")
-    return F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    below n words."""
+    return gram_array(F.split(F.trim(F.lower(text_col)), r"\s+"), n)
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -186,22 +186,34 @@ def test_pipeline_gate_shape_and_collapse(spark):
 
 
 def test_minhash_fast_identical_sets_share_signatures(spark):
-    from readability_py_spark.operators.dedup import (
-        _band_signatures,
-        _minhash_fast_col,
-    )
+    from readability_py_spark.operators.dedup import _band_signatures
 
     df = spark.createDataFrame(
         [(1, ["a b", "b c", "c d"]), (2, ["a b", "b c", "c d"]), (3, ["x y"])],
         "doc_id long, sh array<string>",
     )
-    sig = _band_signatures(df, hash_col=_minhash_fast_col)
+    sig = _band_signatures(df, family="xxhash64")
     rows = sig.collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], {})[r["band"]] = r["band_sig"]
     assert by_doc[1] == by_doc[2]
     assert by_doc[1] != by_doc[3]
+
+
+def test_band_signatures_rejects_unknown_family(spark):
+    """The hash family is an explicit choice between exactly two
+    values; anything else raises instead of silently building md5."""
+    from readability_py_spark.operators.dedup import (
+        MINHASH_FAMILIES,
+        _band_signatures,
+    )
+
+    assert MINHASH_FAMILIES == ("md5", "xxhash64")
+    df = spark.createDataFrame([(1, ["a b"])], "doc_id long, sh array<string>")
+    for bad in ("sha1", "MD5", None):
+        with pytest.raises(ValueError, match="unknown MinHash family"):
+            _band_signatures(df, family=bad)
 
 
 def test_minhash_fast_lsh_pipeline_equivalence(spark):
@@ -211,7 +223,6 @@ def test_minhash_fast_lsh_pipeline_equivalence(spark):
     equality holds as long as band recall covers the true pairs)."""
     from readability_py_spark.operators.dedup import (
         _band_signatures,
-        _minhash_fast_col,
         _persist,
         _shingled,
         minhash_lsh_dups_from,
@@ -226,7 +237,7 @@ def test_minhash_fast_lsh_pipeline_equivalence(spark):
     release_caches()
     sh = _persist(_shingled(spark, SF_SMOKE).select("doc_id", "sh"))
     fast_sig = _persist(
-        _band_signatures(_shingled(spark, SF_SMOKE), hash_col=_minhash_fast_col)
+        _band_signatures(_shingled(spark, SF_SMOKE), family="xxhash64")
     )
     fast_pairs = {
         (r["a_id"], r["b_id"], r["jaccard"])

@@ -132,3 +132,59 @@ def test_decontaminate_matches_in_row_intersect_form(spark):
         for r in q_decontaminate(spark, SF_MID).collect()
     }
     assert mine == ref
+
+
+def _lambda_bodies_with_row_refs(expr) -> list[str]:
+    """Every LambdaFunction body in an unresolved Catalyst tree that
+    contains an UnresolvedAttribute (a row column), as SQL strings.
+    Lambda variables are UnresolvedNamedLambdaVariable, so a body that
+    refers only to its own variables and literals yields nothing."""
+
+    def children(e):
+        seq = e.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def has_attr(e) -> bool:
+        if e.getClass().getSimpleName() == "UnresolvedAttribute":
+            return True
+        return any(has_attr(c) for c in children(e))
+
+    found = []
+    stack = [expr]
+    while stack:
+        e = stack.pop()
+        if e.getClass().getSimpleName() == "LambdaFunction" and has_attr(
+            e.function()
+        ):
+            found.append(e.sql())
+        stack.extend(children(e))
+    return found
+
+
+def test_token_builder_lambdas_never_reference_row_expressions(spark):
+    """A lambda body re-evaluates every non-lambda subexpression once
+    per element, so a gram lambda that indexes the row's split(text)
+    re-splits the document once per gram — O(words²) per row. The
+    shared token builders must build arrays from shifted slices
+    outside the lambda; this walks each one's Catalyst tree."""
+    from pyspark.sql import functions as F
+
+    from readability_py_spark.operators.dedup import shingles_of
+    from readability_py_spark.operators.textstats import (
+        GOPHER_STOPWORDS,
+        gopher_flag_cols,
+        gram_array,
+        repetition_cols,
+    )
+
+    text = F.col("text")
+    words = F.split(F.trim(F.lower(text)), r"\s+")
+    cols = {f"gram_array n={n}": gram_array(words, n) for n in (2, 3, 5, 13)}
+    cols["shingles_of"] = shingles_of(text)
+    cols["top2gram_frac"], cols["dup5gram_frac"] = repetition_cols(text)
+    cols["gopher pass"] = gopher_flag_cols(text, GOPHER_STOPWORDS)["pass"]
+    for name, col in cols.items():
+        # Spark 4 columns carry a ColumnNode; the session converts it
+        # to the (unresolved) Catalyst expression
+        bad = _lambda_bodies_with_row_refs(spark._jsparkSession.expression(col._jc))
+        assert not bad, (name, bad)

@@ -11,9 +11,17 @@ pandas batches, so hypothesis can afford hundreds of examples:
   event times and arbitrary micro-batch boundaries — the
   batch-split-invariance property that makes the streaming operator
   equal its batch twin on any drained input.
+
+The in-row token builders (``gram_array``, ``shingles_from_tokens``,
+the Gopher stopword count) are JVM expressions, so their properties
+run through Spark: each hypothesis example is one batch of token
+lists evaluated in a single job, checked against a pure-Python
+reference.
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 from hypothesis import given, settings
@@ -330,3 +338,98 @@ def test_streaming_sessionize_cross_batch_backward_merge():
         (0, 20, 2),
         (60, 60, 1),
     ]
+
+
+# ---------------------------------------------------------------------------
+# in-row token builders vs pure-Python references
+# ---------------------------------------------------------------------------
+
+GRAM_NS = (2, 3, 5, 13)
+
+# empty strings are what split(text, ' ') yields on runs of spaces;
+# a small vocabulary makes repeated grams likely
+token_strategy = st.sampled_from(
+    ["", "a", "b", "the", "The,", "naïve", "straße", "日本", "ü", "x y"]
+)
+
+
+def _edge_token_lists() -> list[list[str]]:
+    """Lengths 0, 1, n-1, n, n+1 for every n, plus empty tokens,
+    repeated grams and non-ASCII words."""
+    out: list[list[str]] = [[], ["solo"], [""], ["", ""], ["a", "", "", "b"]]
+    for n in GRAM_NS:
+        for k in (n - 1, n, n + 1):
+            out.append([f"w{i % 3}é" for i in range(k)])
+    out.append(["ab", "ab"] * 8)
+    out.append(["日本", "語", "日本", "語", "日本"])
+    return out
+
+
+def _grams(w: list[str], n: int) -> list[str]:
+    return [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    lists=st.lists(st.lists(token_strategy, max_size=20), min_size=1, max_size=25)
+)
+def test_gram_builders_match_python_reference(spark, lists):
+    """gram_array(w, n) for n in {2, 3, 5, 13} and
+    shingles_from_tokens(w) are byte-identical to the list-slicing
+    reference, shingles in array_distinct's first-occurrence order."""
+    from pyspark.sql import functions as F
+
+    from readability_py_spark.operators.dedup import shingles_from_tokens
+    from readability_py_spark.operators.textstats import gram_array
+
+    rows = list(enumerate(_edge_token_lists() + lists))
+    df = spark.createDataFrame(rows, "id int, w array<string>")
+    w = F.col("w")
+    got = df.select(
+        "id",
+        *[gram_array(w, n).alias(f"g{n}") for n in GRAM_NS],
+        shingles_from_tokens(w).alias("sh"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        toks = rows[r["id"]][1]
+        for n in GRAM_NS:
+            assert r[f"g{n}"] == _grams(toks, n), (toks, n)
+        assert r["sh"] == list(dict.fromkeys(_grams(toks, 2))), toks
+
+
+# same normalization as gopher_flag_cols: trim spaces, split on Java's
+# ASCII \s+, lowercase, keep a-z only
+def _stop_hits(text: str, stops: list[str]) -> int:
+    words = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+    clean = {re.sub("[^a-z]", "", w.lower()) for w in words}
+    return len(set(stops) & clean)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    texts=st.lists(
+        st.lists(token_strategy, max_size=12).map(" ".join),
+        min_size=1,
+        max_size=25,
+    )
+)
+def test_gopher_stopword_rule_matches_python_count(spark, texts):
+    """ok_stopwords is "at least two DISTINCT stop words present";
+    a stop list naming a word twice counts it once."""
+    from pyspark.sql import functions as F
+
+    from readability_py_spark.operators.textstats import gopher_flag_cols
+
+    texts = texts + ["the the the", "The, a", "  the\ta  ", ""]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    for stops in (["the", "a"], ["the", "the", "b"], ["a", "b", "x", "y"]):
+        got = df.select(
+            "id", gopher_flag_cols(F.col("text"), stops)["ok_stopwords"].alias("ok")
+        ).collect()
+        assert len(got) == len(texts)
+        for r in got:
+            assert r["ok"] == (_stop_hits(texts[r["id"]], stops) >= 2), (
+                texts[r["id"]],
+                stops,
+            )
